@@ -6,7 +6,8 @@ import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.SyncJob
+import graft.codegen.SyncSqlGenerator
+import graft.engine.{LocalSync, SyncJob}
 import graft.report.SummaryReporter
 
 /** CLI with the reference's argv contract (/root/reference/sync.py:629-642):
@@ -14,6 +15,11 @@ import graft.report.SummaryReporter
   *   graft.cli.Main [production.sql] [backup.sql] [output.sql]
   *
   * defaulting to prod.sql / backup.sql / database_sync_crud.sql.
+  *
+  * The default sync of two small plain local dumps runs driver-local
+  * ([[graft.engine.LocalSync]]) and never starts Spark — see
+  * [[localRoute]]. Every other input takes the Spark routes below, whose
+  * scripts are byte-identical.
   *
   * `--distributed-out <dir>` routes the script through the distributed
   * full-script sink (SyncJob.syncDistributed) instead of collecting ops
@@ -51,13 +57,44 @@ import graft.report.SummaryReporter
   */
 object Main {
 
-  def main(rawArgs: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = {
+    val rc = run(args)
+    if (rc != 0) sys.exit(rc)
+  }
+
+  private def usage(msg: String): Int = {
+    Console.err.println(s"❌ Usage: $msg")
+    1
+  }
+
+  /** The value after `flag`, with both removed from `args`; Left(exit
+    * code) when the flag is the last argument.
+    */
+  private def flagValue(args: Array[String], flag: String)
+      : Either[Int, (Option[String], Array[String])] = {
+    val i = args.indexOf(flag)
+    if (i < 0) Right((None, args))
+    else if (i + 1 >= args.length) Left(usage(s"$flag <dir>"))
+    else Right((Some(args(i + 1)), args.patch(i, Nil, 2)))
+  }
+
+  /** The default sync runs driver-local ([[graft.engine.LocalSync]], no
+    * SparkSession) when both dumps are small plain local files, unless
+    * the run asked for a Spark event log — that log is the artifact it
+    * wants, so Spark runs.
+    */
+  private[graft] def localRoute(prodFile: String, backupFile: String,
+      props: collection.Map[String, String] = sys.props,
+      heapBytes: Long = Runtime.getRuntime.maxMemory): Boolean =
+    !props.get("spark.eventLog.enabled").exists(_.trim.equalsIgnoreCase("true")) &&
+      LocalSync.fits(Seq(prodFile, backupFile), heapBytes)
+
+  /** The CLI; returns the process exit code. */
+  def run(rawArgs: Array[String]): Int = {
     val vacIdx = rawArgs.indexOf("--vacuum")
     if (vacIdx >= 0) {
-      if (vacIdx + 1 >= rawArgs.length) {
-        System.err.println("❌ Usage: --vacuum <stateDir> [keepLast]")
-        sys.exit(1)
-      }
+      if (vacIdx + 1 >= rawArgs.length)
+        return usage("--vacuum <stateDir> [keepLast]")
       val stateDir = rawArgs(vacIdx + 1)
       val keep = rawArgs.lift(vacIdx + 2).flatMap(_.toIntOption).getOrElse(1)
       val deleted = graft.streaming.DumpWatchSync.vacuum(stateDir, keep)
@@ -65,14 +102,12 @@ object Main {
         (if (deleted.size == 1) "directory" else "directories") +
         s" (kept newest $keep per family):")
       deleted.foreach(d => println(s"  $d"))
-      return
+      return 0
     }
     val gvIdx = rawArgs.indexOf("--gate-vacuum")
     if (gvIdx >= 0) {
-      if (gvIdx + 1 >= rawArgs.length) {
-        System.err.println("❌ Usage: --gate-vacuum <stateDir>")
-        sys.exit(1)
-      }
+      if (gvIdx + 1 >= rawArgs.length)
+        return usage("--gate-vacuum <stateDir>")
       val stateDir = rawArgs(gvIdx + 1)
       val spark = SparkSession.builder()
         .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
@@ -86,14 +121,12 @@ object Main {
           " at/below the second-newest compaction mark:")
         deleted.foreach(d => println(s"  $d"))
       } finally spark.stop()
-      return
+      return 0
     }
     val histIdx = rawArgs.indexOf("--history")
     if (histIdx >= 0) {
-      if (histIdx + 2 >= rawArgs.length) {
-        System.err.println("❌ Usage: --history <stateDir> <table> [pk]")
-        sys.exit(1)
-      }
+      if (histIdx + 2 >= rawArgs.length)
+        return usage("--history <stateDir> <table> [pk]")
       val stateDir = rawArgs(histIdx + 1)
       val table = rawArgs(histIdx + 2)
       val pk = rawArgs.lift(histIdx + 3)
@@ -119,19 +152,16 @@ object Main {
             s" → $to): ($vals)")
         }
       } finally spark.stop()
-      return
+      return 0
     }
-    val distIdx = rawArgs.indexOf("--distributed-out")
-    val distributedOut =
-      if (distIdx >= 0 && distIdx + 1 < rawArgs.length) Some(rawArgs(distIdx + 1))
-      else None
-    val args1 = if (distIdx >= 0)
-      rawArgs.patch(distIdx, Nil, 2) else rawArgs
-    val stateIdx = args1.indexOf("--state")
-    val stateDir =
-      if (stateIdx >= 0 && stateIdx + 1 < args1.length) Some(args1(stateIdx + 1))
-      else None
-    val args0 = if (stateIdx >= 0) args1.patch(stateIdx, Nil, 2) else args1
+    val (distributedOut, args1) = flagValue(rawArgs, "--distributed-out") match {
+      case Right(v) => v
+      case Left(rc) => return rc
+    }
+    val (stateDir, args0) = flagValue(args1, "--state") match {
+      case Right(v) => v
+      case Left(rc) => return rc
+    }
     val schemaDiffOnly = args0.contains("--schema-diff")
     val args = args0.filterNot(_ == "--schema-diff")
 
@@ -141,8 +171,28 @@ object Main {
 
     for (f <- Seq(prodFile, backupFile)) {
       if (!Files.exists(Paths.get(f))) {
-        System.err.println(s"❌ Error: File not found: $f")
-        sys.exit(1)
+        Console.err.println(s"❌ Error: File not found: $f")
+        return 1
+      }
+    }
+
+    val now = LocalDateTime.now.format(
+      DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+    if (!schemaDiffOnly)
+      println(s"Comparing SQL dumps:\n  Production: $prodFile\n  Backup: $backupFile")
+    if (!schemaDiffOnly && distributedOut.isEmpty && stateDir.isEmpty &&
+        localRoute(prodFile, backupFile)) {
+      val outcome = LocalSync.run(prodFile, backupFile)
+      // a diff past the collected-script gate goes to syncAuto's
+      // distributed sink below, as it would on the Spark route
+      if (SyncJob.collectable(outcome)) {
+        SummaryReporter.print(outcome)
+        // like syncAuto's Hadoop create, which makes missing parent dirs
+        val out = Paths.get(outputFile).toAbsolutePath
+        Files.createDirectories(out.getParent)
+        Files.write(out, SyncSqlGenerator.assemble(outcome, now).getBytes("UTF-8"))
+        println(s"\n💾 Sync script written to: $outputFile")
+        return 0
       }
     }
 
@@ -175,11 +225,8 @@ object Main {
           }
           println(s"  ${c.table}.${c.column}: ${c.change}$detail")
         }
-        return
+        return 0
       }
-      println(s"Comparing SQL dumps:\n  Production: $prodFile\n  Backup: $backupFile")
-      val now = LocalDateTime.now.format(
-        DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
       (distributedOut, stateDir) match {
         case (Some(dir), _) =>
           val outcome = new SyncJob(spark).syncDistributed(
@@ -219,6 +266,7 @@ object Main {
             case None => println(s"\n💾 Sync script written to: $outputFile")
           }
       }
+      0
     } finally spark.stop()
   }
 }

@@ -177,8 +177,9 @@ object BucketedSync {
     */
   private[engine] def catalogInfoOf(spark: SparkSession,
       tableName: String): SyncJob.SnapshotCatalog = {
-    val rows = spark.read.parquet(catPath(spark, tableName))
-      .orderBy("ord").collect()
+    // a handful of rows: sorted on the driver, not by a range-sort job
+    val rows = spark.read.parquet(catPath(spark, tableName)).collect()
+      .sortBy(_.getAs[Long]("ord"))
     val metas = scala.collection.immutable.ListMap(rows.map { r =>
       r.getAs[String]("table") -> graft.model.TableMeta(
         r.getAs[String]("table"),

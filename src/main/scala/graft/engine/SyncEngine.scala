@@ -75,6 +75,69 @@ final case class SyncOutcome(
       */
     createSections: Map[String, String] = Map.empty)
 
+/** A dump's catalog plus the byte positions needed to reproduce the
+  * reference's whole-file CREATE-statement capture (see
+  * SyncOutcome.createSections): the byte position of the first "CREATE
+  * TABLE" token in the file and each table's own statement-end byte
+  * (exclusive of the '\n' after ';'). Built the same way on every route
+  * from the dump's CREATE-shaped statements in offset order.
+  */
+private[graft] final case class CatalogInfo(
+    metas: ListMap[String, TableMeta],
+    firstCreatePos: Option[Long],
+    stmtEnd: Map[String, Long])
+
+private[graft] object CatalogInfo {
+  /** A CREATE-shaped statement (`rlike` form; `^` anchors at the text's
+    * start, so [[isCreate]]'s `lookingAt` is the same test).
+    */
+  val CreatePattern = "(?is)^\\s*CREATE\\s+TABLE"
+  private val CreateRe = java.util.regex.Pattern.compile(CreatePattern)
+
+  def isCreate(text: String): Boolean = CreateRe.matcher(text).lookingAt()
+
+  /** `creates` are the CREATE-shaped statements in offset order. */
+  def of(creates: Seq[Stmt]): CatalogInfo = {
+    val metas = DumpParser.parseCatalog(creates.iterator.map(_.text))
+    val firstCreatePos = creates.headOption.map { st =>
+      val m = "(?i)CREATE TABLE".r.findFirstMatchIn(st.text)
+      val charIdx = m.map(_.start).getOrElse(0)
+      st.off + st.text.substring(0, charIdx).getBytes("UTF-8").length
+    }
+    val ends = creates.flatMap { st =>
+      DumpParser.parseCreate(st.text).map(m =>
+        m.name -> (st.off + st.text.getBytes("UTF-8").length + 1)) // + ';'
+    }.toMap
+    CatalogInfo(metas, firstCreatePos, ends)
+  }
+
+  /** Reference-quirk CREATE text per missing table (see
+    * SyncOutcome.createSections), sliced from the production dump.
+    */
+  def createSections(prodPath: String, firstCreatePos: Option[Long],
+      stmtEnd: Map[String, Long], missingTables: Seq[String])
+      : Map[String, String] = firstCreatePos match {
+    case Some(start) => missingTables.flatMap { t =>
+      stmtEnd.get(t).map(end => t -> fileSlice(prodPath, start, end))
+    }.toMap
+    case None => Map.empty
+  }
+
+  /** Raw byte slice of a dump file (driver-side). `end` is clamped to
+    * the file: a dump's last statement may lack the `\n` (or `;\n`)
+    * that `stmtEnd` counts past its text.
+    */
+  private def fileSlice(path: String, start: Long, end: Long): String = {
+    val raf = new java.io.RandomAccessFile(path, "r")
+    try {
+      raf.seek(start)
+      val buf = new Array[Byte]((math.min(end, raf.length) - start).toInt)
+      raf.readFully(buf)
+      new String(buf, "UTF-8")
+    } finally raf.close()
+  }
+}
+
 /** The distributed dump-diff pipeline (reference lifecycle
   * sync.py:228-302 re-expressed as DataFrame jobs):
   *
@@ -103,47 +166,15 @@ class SyncJob(spark: SparkSession) {
   def catalog(stmts: Dataset[Stmt]): ListMap[String, TableMeta] =
     catalogInfo(stmts).metas
 
-  /** Catalog + the byte positions needed to reproduce the reference's
-    * whole-file CREATE-statement capture (see SyncOutcome.createSections):
-    * the byte position of the first "CREATE TABLE" token in the file and
-    * each table's own statement-end byte (exclusive of the '\n' after
-    * ';').
+  /** Catalog + the byte positions behind the reference-quirk CREATE
+    * sections ([[CatalogInfo]]): CREATE-shaped statements are a handful
+    * of rows, so they are collected unsorted — one job — and put in
+    * offset order on the driver (an `orderBy` would add the range
+    * sort's sampling and shuffle jobs for no gain).
     */
-  private[graft] case class CatalogInfo(
-      metas: ListMap[String, TableMeta],
-      firstCreatePos: Option[Long],
-      stmtEnd: Map[String, Long])
-
-  private[graft] def catalogInfo(stmts: Dataset[Stmt]): CatalogInfo = {
-    val creates = stmts
-      .filter(col("text").rlike("(?is)^\\s*CREATE\\s+TABLE"))
-      .orderBy("off")
-      .collect()
-    val metas = DumpParser.parseCatalog(creates.iterator.map(_.text))
-    val firstCreatePos = creates.headOption.map { st =>
-      val m = "(?i)CREATE TABLE".r.findFirstMatchIn(st.text)
-      val charIdx = m.map(_.start).getOrElse(0)
-      st.off + st.text.substring(0, charIdx).getBytes("UTF-8").length
-    }
-    val ends = creates.flatMap { st =>
-      DumpParser.parseCreate(st.text).map(m =>
-        m.name -> (st.off + st.text.getBytes("UTF-8").length + 1)) // + ';'
-    }.toMap
-    CatalogInfo(metas, firstCreatePos, ends)
-  }
-
-  /** Raw byte slice of a dump file (driver-side; used only to emit the
-    * reference-quirk CREATE sections for missing tables).
-    */
-  private def fileSlice(path: String, start: Long, end: Long): String = {
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try {
-      raf.seek(start)
-      val buf = new Array[Byte]((end - start).toInt)
-      raf.readFully(buf)
-      new String(buf, "UTF-8")
-    } finally raf.close()
-  }
+  private[graft] def catalogInfo(stmts: Dataset[Stmt]): CatalogInfo =
+    CatalogInfo.of(stmts.filter(col("text").rlike(CatalogInfo.CreatePattern))
+      .collect().sortBy(_.off).toSeq)
 
   /** Parse + dedup the record frame of one dump:
     * (table, pk, ord_off, ord_row, vals) — one row per surviving
@@ -154,18 +185,8 @@ class SyncJob(spark: SparkSession) {
     */
   def records(stmts: Dataset[Stmt], cat: ListMap[String, TableMeta]): DataFrame = {
     val bc = spark.sparkContext.broadcast(cat)
-    val rows: Dataset[InsertRow] = stmts.flatMap { st =>
-      DumpParser.parseInsert(st.text) match {
-        case Some((table, valuesPart)) if bc.value.contains(table) =>
-          val meta = bc.value(table)
-          DumpParser.splitValueSets(valuesPart).iterator.zipWithIndex.map {
-            case (vs, i) =>
-              val vals = DumpParser.splitValues(vs)
-              InsertRow(table, st.off, i, DumpParser.pkString(vals, meta), vals)
-          }.toSeq
-        case _ => Nil // unknown table or no column list: ignored (sync.py:55,59)
-      }
-    }
+    val rows: Dataset[InsertRow] =
+      stmts.flatMap(st => DumpParser.insertRows(st, bc.value))
     val part = Window.partitionBy("table", "pk")
     val lastFirst = part.orderBy(col("off").desc, col("row").desc)
     rows.toDF()
@@ -279,13 +300,9 @@ class SyncJob(spark: SparkSession) {
     val joined = joined0.cache()
     try {
       val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      val nOps = outcome.stats.valuesIterator
-        .map(s => s.missingCount + s.updatedCount + s.deletedCount).sum
       val lineFrame = scriptLineFrame(joined, prodInfo.metas, backupCat,
         commonTables, outcome, now)
-      val estBytes = outcome.stats.valuesIterator.map(_.opBytes).sum
-      if (nOps <= maxCollectedOps &&
-          estBytes <= SyncJob.MaxCollectedBytes) {
+      if (SyncJob.collectable(outcome, maxCollectedOps)) {
         val lines = lineFrame.as[String].collect()
         val dirPath = new org.apache.hadoop.fs.Path(outDir)
         val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -365,13 +382,9 @@ class SyncJob(spark: SparkSession) {
     val joined = joined0.cache()
     try {
       val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      val nOps = outcome.stats.valuesIterator
-        .map(s => s.missingCount + s.updatedCount + s.deletedCount).sum
       val lineFrame = scriptLineFrame(joined, prodInfo.metas, backupCat,
         commonTables, outcome, now)
-      val estBytes = outcome.stats.valuesIterator.map(_.opBytes).sum
-      if (nOps <= maxCollectedOps &&
-          estBytes <= SyncJob.MaxCollectedBytes) {
+      if (SyncJob.collectable(outcome, maxCollectedOps)) {
         val lines = lineFrame.as[String].collect()
         // Hadoop FS, not java.nio: outPath resolves against the
         // deployment FS like every other sink in this file (the
@@ -591,24 +604,12 @@ class SyncJob(spark: SparkSession) {
   private[graft] def opBytesCol(prodCat: scala.collection.Map[String, TableMeta],
       backupCat: scala.collection.Map[String, TableMeta])
       : org.apache.spark.sql.Column = {
-    import graft.codegen.SyncSqlGenerator
-    def emptyVals(m: TableMeta) = IndexedSeq.fill(m.columns.length)("")
-    val updOh: Map[String, Long] = prodCat.iterator.map { case (t, m) =>
-      t -> (SyncSqlGenerator.updateStatement(m, emptyVals(m), emptyVals(m))
-        .length + 1L)
-    }.toMap
-    val insOh: Map[String, Long] = prodCat.iterator.map { case (t, m) =>
-      t -> (DumpParser.rawInsert(m.name, Nil).length + 1L)
-    }.toMap
-    val delOh: Map[String, Long] = backupCat.iterator.map { case (t, m) =>
-      t -> (SyncSqlGenerator.deleteStatement(m, emptyVals(m)).length + 1L)
-    }.toMap
+    val ohs = SyncJob.opOverheads(prodCat, backupCat)
+    def ohOf(op: String) = element_at(typedLit(ohs(op)), col("table"))
     val oh =
-      when(col("op") === Differ.OP_UPDATE,
-        element_at(typedLit(updOh), col("table")))
-        .when(col("op") === Differ.OP_DELETE,
-          element_at(typedLit(delOh), col("table")))
-        .otherwise(element_at(typedLit(insOh), col("table")))
+      when(col("op") === Differ.OP_UPDATE, ohOf(Differ.OP_UPDATE))
+        .when(col("op") === Differ.OP_DELETE, ohOf(Differ.OP_DELETE))
+        .otherwise(ohOf(Differ.OP_INSERT))
     when(col("op").isNotNull,
       aggregate(coalesce(col("p_vals"), col("b_vals")),
         lit(0L),
@@ -627,13 +628,8 @@ class SyncJob(spark: SparkSession) {
     val prodCat = prodInfo.metas
     val missingTables = prodCat.keys.filterNot(backupCat.contains).toSeq
     val extraTables = backupCat.keys.filterNot(prodCat.contains).toSeq
-    // reference-quirk CREATE sections (whole-file regex capture)
-    val createSections = (prodInfo.firstCreatePos match {
-      case Some(start) => missingTables.flatMap { t =>
-        prodInfo.stmtEnd.get(t).map(end => t -> fileSlice(prodPath, start, end))
-      }
-      case None => Nil
-    }).toMap
+    val createSections = CatalogInfo.createSections(prodPath,
+      prodInfo.firstCreatePos, prodInfo.stmtEnd, missingTables)
     val stats = joined.groupBy("table").agg(
       count(col("p_present")).as("productionCount"),
       count(col("b_present")).as("backupCount"),
@@ -690,12 +686,8 @@ class SyncJob(spark: SparkSession) {
     val commonTables = prodCat.keys.filter(backupCat.contains).toSeq
     val missingTables = prodCat.keys.filterNot(backupCat.contains).toSeq
     val extraTables = backupCat.keys.filterNot(prodCat.contains).toSeq
-    val createSections = (prodSnap.firstCreatePos match {
-      case Some(start) => missingTables.flatMap { t =>
-        prodSnap.stmtEnd.get(t).map(end => t -> fileSlice(prodPath, start, end))
-      }
-      case None => Nil
-    }).toMap
+    val createSections = CatalogInfo.createSections(prodPath,
+      prodSnap.firstCreatePos, prodSnap.stmtEnd, missingTables)
     val (joined0, _, _) =
       BucketedSync.diffChangedInfo(spark, prodTable, backupTable)
     val joined = joined0.cache()
@@ -745,6 +737,39 @@ object SyncJob {
     * syntax overhead.
     */
   val MaxCollectedBytes: Long = 256L << 20
+
+  /** The collected routes' driver gate: the op count is within
+    * `maxCollectedOps` and the estimated script size
+    * ([[TableStats.opBytes]]) within [[MaxCollectedBytes]].
+    */
+  private[graft] def collectable(o: SyncOutcome,
+      maxCollectedOps: Long = DefaultMaxCollectedOps): Boolean = {
+    val nOps = o.stats.valuesIterator
+      .map(s => s.missingCount + s.updatedCount + s.deletedCount).sum
+    nOps <= maxCollectedOps &&
+      o.stats.valuesIterator.map(_.opBytes).sum <= MaxCollectedBytes
+  }
+
+  /** Per op, per table: the rendered statement's syntax bytes (the
+    * codegen skeleton over empty values, plus its newline) — the
+    * non-value part of the [[TableStats.opBytes]] estimate (see
+    * [[SyncJob.opBytesCol]]).
+    */
+  private[graft] def opOverheads(prodCat: scala.collection.Map[String, TableMeta],
+      backupCat: scala.collection.Map[String, TableMeta])
+      : Map[String, Map[String, Long]] = {
+    import graft.codegen.SyncSqlGenerator
+    def emptyVals(m: TableMeta) = IndexedSeq.fill(m.columns.length)("")
+    def per(cat: scala.collection.Map[String, TableMeta])(
+        render: TableMeta => String): Map[String, Long] =
+      cat.iterator.map { case (t, m) => t -> (render(m).length + 1L) }.toMap
+    Map(
+      Differ.OP_UPDATE -> per(prodCat)(m =>
+        SyncSqlGenerator.updateStatement(m, emptyVals(m), emptyVals(m))),
+      Differ.OP_INSERT -> per(prodCat)(m => DumpParser.rawInsert(m.name, Nil)),
+      Differ.OP_DELETE -> per(backupCat)(m =>
+        SyncSqlGenerator.deleteStatement(m, emptyVals(m))))
+  }
 
   /** A [[BucketedSync]] snapshot's sidecar restored for script
     * assembly: DDL-ordered catalog, per-table post-dedup record counts,

@@ -3,7 +3,7 @@ package graft.parse
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
-import graft.model.TableMeta
+import graft.model.{InsertRow, Stmt, TableMeta}
 
 /** Pure-Scala MySQL-dump grammar, reimplementing the reference parser's
   * documented semantics (/root/reference/sync.py:29-173, catalogued in
@@ -104,6 +104,22 @@ object DumpParser {
     case InsertHead(table, valuesPart) => Some((table, valuesPart))
     case _ => None
   }
+
+  /** The rows of one INSERT statement, keyed against `cat`: one per
+    * value set, `row` its index in the VALUES clause. A statement that
+    * is not an INSERT with a column list, or names a table outside
+    * `cat`, has no rows (sync.py:55,59).
+    */
+  def insertRows(st: Stmt, cat: collection.Map[String, TableMeta]): Iterator[InsertRow] =
+    parseInsert(st.text) match {
+      case Some((table, valuesPart)) if cat.contains(table) =>
+        val meta = cat(table)
+        splitValueSets(valuesPart).iterator.zipWithIndex.map { case (vs, i) =>
+          val vals = splitValues(vs)
+          InsertRow(table, st.off, i, pkString(vals, meta), vals)
+        }
+      case _ => Iterator.empty
+    }
 
   /** Split a VALUES blob into individual `(...)` groups, honoring quoted
     * strings (quote-aware superset of the reference's naive regex,

@@ -20,6 +20,7 @@ import graft.parse.DumpParser
   * INSERT) against a Map[table -> Map[pk -> values]] state.
   */
 class RoundTripSpec extends SparkSuite {
+  import RoundTripSpec._
 
   // ------------------------------------------------------------ helpers
 
@@ -29,22 +30,6 @@ class RoundTripSpec extends SparkSuite {
     p.toFile.deleteOnExit()
     p
   }
-
-  private def renderDump(tables: Seq[(String, Seq[Seq[String]])]): String =
-    tables.map { case (name, rows) =>
-      val ddl =
-        s"""CREATE TABLE `$name` (
-           |  `id` INT,
-           |  `v1` VARCHAR(50),
-           |  `v2` VARCHAR(50),
-           |  PRIMARY KEY (`id`)
-           |) ENGINE=InnoDB;""".stripMargin
-      val ins = rows.grouped(3).map { batch =>
-        "INSERT INTO `" + name + "` (`id`, `v1`, `v2`) VALUES\n" +
-          batch.map(r => "(" + r.mkString(", ") + ")").mkString(",\n") + ";"
-      }.mkString("\n")
-      if (rows.isEmpty) ddl else ddl + "\n" + ins
-    }.mkString("\n\n")
 
   /** Dedup rows last-wins by first value (the PK), preserving
     * first-occurrence order — the reference dict semantics.
@@ -109,6 +94,54 @@ class RoundTripSpec extends SparkSuite {
 
   // ----------------------------------------------------------- the prop
 
+  test("round trip: applying the sync script to backup reproduces production") {
+    // deterministic sampling (seeded) — scalacheck Gen without the
+    // scalatestplus bridge
+    samples(8).foreach { case (prodTables, backupTables) =>
+      val prodDump = renderDump(prodTables)
+      val backupDump = renderDump(backupTables)
+      val outcome = new SyncJob(spark)
+        .run(tmpFile(prodDump).toString, tmpFile(backupDump).toString)
+      val script = SyncSqlGenerator.assemble(outcome, "T")
+
+      val metas = outcome.prodCatalog ++ outcome.backupCatalog
+      val backupState: Map[String, Map[String, Seq[String]]] =
+        backupTables.map { case (t, rows) => t -> lastWins(rows) }.toMap
+      val got = applyScript(script, backupState, metas.toMap)
+
+      val prodState = prodTables.map { case (t, rows) => t -> lastWins(rows) }.toMap
+      prodState.foreach { case (t, expected) =>
+        if (backupState.contains(t)) {
+          assert(got(t) == expected, s"table $t records differ\nscript:\n$script")
+        } else {
+          // reference quirk preserved: missing tables are created but
+          // their records are NOT inserted (sync.py:256-257)
+          assert(got(t) == Map.empty, s"prod-only table $t should be created empty")
+        }
+      }
+      got.keys.foreach(t => assert(prodState.contains(t), s"table $t should be dropped"))
+    }
+  }
+}
+
+/** The randomized dump pairs, shared with the route-parity spec. */
+object RoundTripSpec {
+  def renderDump(tables: Seq[(String, Seq[Seq[String]])]): String =
+    tables.map { case (name, rows) =>
+      val ddl =
+        s"""CREATE TABLE `$name` (
+           |  `id` INT,
+           |  `v1` VARCHAR(50),
+           |  `v2` VARCHAR(50),
+           |  PRIMARY KEY (`id`)
+           |) ENGINE=InnoDB;""".stripMargin
+      val ins = rows.grouped(3).map { batch =>
+        "INSERT INTO `" + name + "` (`id`, `v1`, `v2`) VALUES\n" +
+          batch.map(r => "(" + r.mkString(", ") + ")").mkString(",\n") + ";"
+      }.mkString("\n")
+      if (rows.isEmpty) ddl else ddl + "\n" + ins
+    }.mkString("\n\n")
+
   private val litGen: Gen[String] = Gen.oneOf(
     "NULL", "'a'", "'b, c'", "'O''Brien'", "\"dq\"", "123", "45.6",
     "'x)y'", "''", "'MODIFIED'")
@@ -136,38 +169,13 @@ class RoundTripSpec extends SparkSuite {
       (prod, back)
     }
 
-  test("round trip: applying the sync script to backup reproduces production") {
-    // deterministic sampling (seeded) — scalacheck Gen without the
-    // scalatestplus bridge
+  /** `n` seeded cases: (production tables, backup tables). */
+  def samples(n: Int): Seq[(Seq[(String, Seq[Seq[String]])], Seq[(String, Seq[Seq[String]])])] = {
     var seed = org.scalacheck.rng.Seed(42L)
-    val samples = (1 to 8).map { _ =>
+    (1 to n).map { _ =>
       val s = caseGen.pureApply(Gen.Parameters.default, seed)
       seed = seed.next
       s
-    }
-    samples.foreach { case (prodTables, backupTables) =>
-      val prodDump = renderDump(prodTables)
-      val backupDump = renderDump(backupTables)
-      val outcome = new SyncJob(spark)
-        .run(tmpFile(prodDump).toString, tmpFile(backupDump).toString)
-      val script = SyncSqlGenerator.assemble(outcome, "T")
-
-      val metas = outcome.prodCatalog ++ outcome.backupCatalog
-      val backupState: Map[String, Map[String, Seq[String]]] =
-        backupTables.map { case (t, rows) => t -> lastWins(rows) }.toMap
-      val got = applyScript(script, backupState, metas.toMap)
-
-      val prodState = prodTables.map { case (t, rows) => t -> lastWins(rows) }.toMap
-      prodState.foreach { case (t, expected) =>
-        if (backupState.contains(t)) {
-          assert(got(t) == expected, s"table $t records differ\nscript:\n$script")
-        } else {
-          // reference quirk preserved: missing tables are created but
-          // their records are NOT inserted (sync.py:256-257)
-          assert(got(t) == Map.empty, s"prod-only table $t should be created empty")
-        }
-      }
-      got.keys.foreach(t => assert(prodState.contains(t), s"table $t should be dropped"))
     }
   }
 }

@@ -23,6 +23,14 @@ check dumps "dumps written" /tmp/qs_dumps.log
 step "sync: CLI dump -> ordered CRUD script"
 sbt -batch "runMain graft.cli.Main $OUT/prod.sql $OUT/backup.sql $OUT/cli_sync.sql" >/tmp/qs_cli.log 2>&1
 [ -s "$OUT/cli_sync.sql" ] && echo "   ok: cli script exists" || { echo "   FAIL: cli script missing"; fail=1; }
+# the default route (driver-local for a pair this small) and the --state
+# route (Spark, bucketed snapshots) must write the same script bytes,
+# timestamp line aside
+sbt -batch "runMain graft.cli.Main --state $OUT/cli_state $OUT/prod.sql $OUT/backup.sql $OUT/cli_state.sql" >/tmp/qs_cli_state.log 2>&1
+mask() { sed 's/^-- Generated on:.*/-- Generated on:/' "$1"; }
+if [ -s "$OUT/cli_state.sql" ] && cmp -s <(mask "$OUT/cli_sync.sql") <(mask "$OUT/cli_state.sql"); then
+  echo "   ok: default and --state routes write the same script"
+else echo "   FAIL: default and --state route scripts differ"; fail=1; fi
 sbt -batch "runMain graft.tools.Quickstart sync $OUT" >/tmp/qs_sync.log 2>&1
 check sync "sync script:" /tmp/qs_sync.log
 
