@@ -257,29 +257,25 @@ object Bench {
     }
     val syncEntries = Seq[(String, () => Unit)](
       ("sync_dump_diff", () => {
-        val (_, script) = new SyncJob(spark)
-          .syncCollected(prodPath.toString, backupPath.toString, "bench")
-        Files.write(Paths.get(cacheDir, "sync_out.sql"), script.getBytes("UTF-8"))
+        new SyncJob(spark).syncAuto(prodPath.toString, backupPath.toString,
+          Paths.get(cacheDir, "sync_out.sql").toString, "bench")
         ()
       }),
-      // the 100 TB sink: executor-rendered script to a text sink, no
-      // driver collect (byte parity pinned by DistributedSinkSpec) —
+      // the parts-dir sink (byte parity pinned by DistributedSinkSpec),
       // benched so the scale path's cost is tracked round-over-round,
-      // not just the reference-parity collected path
+      // not just the single-file path
       // ONE output dir for all runs (cold + warms + retries):
-      // syncDistributed writes mode("overwrite"), and a fresh temp dir
-      // per timed run would both accumulate unbounded script copies
-      // under /tmp across bench invocations and charge dir creation to
-      // the timing
-      // size-routed since round 14 (syncDistributedAuto): a sync this
-      // small collects the ordered lines into one part file — the
-      // 32-task text-sink commit overhead was the entry's measured
-      // small-scale floor — while past-threshold diffs take the
-      // executor-rendered distributed write; bytes identical either way
+      // syncDistributed overwrites it, and a fresh temp dir per timed
+      // run would both accumulate unbounded script copies under /tmp
+      // across bench invocations and charge dir creation to the timing
+      // size-routed: a sync this small collects the ordered lines into
+      // one part file — the 32-task text-sink commit overhead was the
+      // entry's measured small-scale floor — while past-threshold diffs
+      // take the executor-rendered text sink; bytes identical either way
       ("sync_dump_diff_distributed", {
         val out = Paths.get(cacheDir, "sync_distributed_out").toString
         () => {
-          new SyncJob(spark).syncDistributedAuto(
+          new SyncJob(spark).syncDistributed(
             prodPath.toString, backupPath.toString, out, "bench")
           ()
         }

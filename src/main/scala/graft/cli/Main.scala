@@ -21,10 +21,11 @@ import graft.report.SummaryReporter
   * [[localRoute]]. Every other input takes the Spark routes below, whose
   * scripts are byte-identical.
   *
-  * `--distributed-out <dir>` routes the script through the distributed
-  * full-script sink (SyncJob.syncDistributed) instead of collecting ops
-  * to the driver — the at-scale path; concatenated sorted part files are
-  * byte-identical to the single-file script.
+  * `--distributed-out <dir>` writes the script as part files under
+  * `<dir>` (SyncJob.syncDistributed): one `part-00000` for a diff within
+  * the collected-script gate, the executor-rendered text sink past it —
+  * the at-scale path. The sorted parts concatenate to the single-file
+  * script plus a final newline.
   *
   * `--state <dir>` enables the repeated-sync fast path: both dumps are
   * snapshotted as bucketed tables under `<dir>` (fingerprint-gated, so
@@ -89,6 +90,37 @@ object Main {
     !props.get("spark.eventLog.enabled").exists(_.trim.equalsIgnoreCase("true")) &&
       LocalSync.fits(Seq(prodFile, backupFile), heapBytes)
 
+  /** The one session shape of every Spark mode of the CLI: the master
+    * and shuffle partitions from `SPARK_MASTER` / `SPARK_GRAFT_CPUS`,
+    * UTC, no UI, WARN logging; `warehouse` moves the warehouse dir (the
+    * `--state` dir, so snapshots outlive the process).
+    */
+  private def session(appName: String,
+      warehouse: Option[String] = None): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = warehouse.fold(builder)(d =>
+      builder.config("spark.sql.warehouse.dir",
+        Paths.get(d).toAbsolutePath.toString)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Writes a driver-held script to `outputFile`, making missing parent
+    * dirs as `SyncJob.syncAuto`'s Hadoop create does.
+    */
+  private def writeScript(outputFile: String, script: String): Unit = {
+    val out = Paths.get(outputFile).toAbsolutePath
+    Files.createDirectories(out.getParent)
+    Files.write(out, script.getBytes("UTF-8"))
+    println(s"\n💾 Sync script written to: $outputFile")
+  }
+
   /** The CLI; returns the process exit code. */
   def run(rawArgs: Array[String]): Int = {
     val vacIdx = rawArgs.indexOf("--vacuum")
@@ -109,11 +141,7 @@ object Main {
       if (gvIdx + 1 >= rawArgs.length)
         return usage("--gate-vacuum <stateDir>")
       val stateDir = rawArgs(gvIdx + 1)
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName("graft-gate-vacuum")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = session("graft-gate-vacuum")
       try {
         val deleted = graft.streaming.StreamingDedup.vacuum(spark, stateDir)
         println(s"Vacuumed ${deleted.size} raw batch " +
@@ -130,15 +158,7 @@ object Main {
       val stateDir = rawArgs(histIdx + 1)
       val table = rawArgs(histIdx + 2)
       val pk = rawArgs.lift(histIdx + 3)
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName("graft-history")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = session("graft-history")
       try {
         val hist = graft.engine.Scd.historyFromState(spark, stateDir, table, pk)
           .collect()
@@ -187,28 +207,14 @@ object Main {
       // distributed sink below, as it would on the Spark route
       if (SyncJob.collectable(outcome)) {
         SummaryReporter.print(outcome)
-        // like syncAuto's Hadoop create, which makes missing parent dirs
-        val out = Paths.get(outputFile).toAbsolutePath
-        Files.createDirectories(out.getParent)
-        Files.write(out, SyncSqlGenerator.assemble(outcome, now).getBytes("UTF-8"))
-        println(s"\n💾 Sync script written to: $outputFile")
+        writeScript(outputFile, SyncSqlGenerator.assemble(outcome, now))
         return 0
       }
     }
 
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-sync")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // --state: snapshots live under the state dir as the warehouse, so
     // they survive across CLI invocations
-    val spark = stateDir.fold(builder)(d =>
-      builder.config("spark.sql.warehouse.dir",
-        Paths.get(d).toAbsolutePath.toString)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-sync", stateDir)
 
     try {
       if (schemaDiffOnly) {
@@ -237,7 +243,7 @@ object Main {
           // bucketed fast path: parse each dump at most once per content
           // (fingerprint-gated snapshots in the state dir), then a
           // Merkle-gated changed-tables-only exchange-free rediff —
-          // script byte-identical to the syncCollected path
+          // script byte-identical to the default route's
           val freshP = graft.engine.BucketedSync.ensureSnapshot(
             spark, prodFile, "graft_state_prod")
           val freshB = graft.engine.BucketedSync.ensureSnapshot(
@@ -247,8 +253,7 @@ object Main {
           val (outcome, script) = new SyncJob(spark).syncFromBucketed(
             "graft_state_prod", "graft_state_backup", prodFile, now)
           SummaryReporter.print(outcome)
-          Files.write(Paths.get(outputFile), script.getBytes("UTF-8"))
-          println(s"\n💾 Sync script written to: $outputFile")
+          writeScript(outputFile, script)
         case (None, None) =>
           // size-routed default: executor-rendered script either way;
           // small diffs collect to the single file (reference parity),

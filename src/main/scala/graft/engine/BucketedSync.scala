@@ -26,8 +26,8 @@ private[engine] case class SnapshotCatRow(ord: Long, table: String,
   * snapshot, N×M dump-pair comparisons) at 100 TB, where the record
   * shuffle dominates the diff cost.
   *
-  * The diff classification is identical to the streaming-parse path
-  * (SyncJob.diffFrameInfo): BucketedSyncSpec asserts op-for-op equality
+  * The diff classification is the streaming-parse path's own rule
+  * ([[SyncJob.classify]]): BucketedSyncSpec asserts op-for-op equality
   * with SyncJob.run and an exchange-free physical plan.
   */
 object BucketedSync {
@@ -197,24 +197,6 @@ object BucketedSync {
     SyncJob.SnapshotCatalog(metas, counts, firstCreate, stmtEnd)
   }
 
-  /** [[diffChanged]]'s joined frame plus the changed / common table
-    * lists — what [[SyncJob.syncFromBucketed]] needs to assemble a full
-    * script (stats for unchanged common tables come from the sidecar
-    * counts, never their data).
-    */
-  private[engine] def diffChangedInfo(spark: SparkSession, prodTable: String,
-      backupTable: String): (DataFrame, Seq[String], Seq[String]) = {
-    import spark.implicits._
-    val common = commonTables(spark, prodTable, backupTable)
-    def recs(t: String): DataFrame = spark.table(t)
-      .filter(col("table").isInCollection(common))
-    def rowCol = concat_ws("", col("pk"), col("vals"))
-    val changed = graft.operators.AntiEntropy
-      .changedBuckets(recs(prodTable), recs(backupTable), col("table"), rowCol)
-      .select("bucket").as[String].collect().toSeq
-    (diffOn(spark, prodTable, backupTable, changed), changed, common)
-  }
-
   /** Digest-bucket partition key: a deterministic function of
     * (table, pk), so the same row lands in the same directory in every
     * snapshot — the property that lets [[diffChangedBuckets]] compare
@@ -254,7 +236,8 @@ object BucketedSync {
     * full-outer join runs ONLY over those (the table filter reaches the
     * snapshot scan, so unchanged tables' files are never row-diffed).
     * The nightly-sync shape at 100 TB: most tables don't change, and
-    * rediff cost becomes O(changed tables), not O(snapshot).
+    * rediff cost becomes O(changed tables), not O(snapshot). The row
+    * diff behind [[SyncJob.syncFromBucketed]] (the CLI `--state` route).
     */
   def diffChanged(spark: SparkSession, prodTable: String,
       backupTable: String): DataFrame = {
@@ -318,23 +301,8 @@ object BucketedSync {
       val byTable = df.filter(col("table").isInCollection(common))
       extraFilter.fold(byTable)(byTable.filter)
     }
-    val p = restrict(spark.table(prodTable))
-      .select(col("table"), col("pk"),
-      lit(true).as("p_present"),
-      col("ord_off").as("p_ord_off"), col("ord_row").as("p_ord_row"),
-      col("vals").as("p_vals"),
-      graft.codegen.SyncSqlGenerator.rawInsertCol(col("table"), col("vals"))
-        .as("p_raw"))
-    val b = restrict(spark.table(backupTable))
-      .select(col("table"), col("pk"),
-      lit(true).as("b_present"),
-      col("ord_off").as("b_ord_off"), col("ord_row").as("b_ord_row"),
-      col("vals").as("b_vals"))
-    p.join(b, Seq("table", "pk"), "full_outer")
-      .withColumn("op",
-        when(col("b_present").isNull, Differ.OP_INSERT)
-          .when(col("p_present").isNull, Differ.OP_DELETE)
-          .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
+    SyncJob.classify(restrict(spark.table(prodTable)),
+      restrict(spark.table(backupTable)))
       .filter(col("op").isNotNull)
   }
 }

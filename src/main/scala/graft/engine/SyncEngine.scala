@@ -54,9 +54,10 @@ final case class TableStats(
     opBytes: Long = 0L)
 
 /** Driver-side result of a sync comparison. `ops` holds every classified
-  * operation (collected; the script output is ~1000× smaller than the
-  * input dumps — for truly huge diffs use [[SyncJob.opsFrame]] and a
-  * distributed write instead).
+  * operation when it comes from [[SyncJob.run]] or [[LocalSync.run]];
+  * the script sinks ([[SyncJob.syncAuto]], [[SyncJob.syncDistributed]],
+  * [[SyncJob.syncFromBucketed]]) never collect per-op rows and return
+  * it with `ops` empty.
   */
 final case class SyncOutcome(
     prodCatalog: ListMap[String, TableMeta],
@@ -154,8 +155,13 @@ private[graft] object CatalogInfo {
   *   6. codegen             — executor-side statement rendering
   *
   * Scale: both record frames shuffle once on (table, pk); the dedup
-  * window and the join reuse the same hash partitioning. No driver state
-  * grows with input size except the final op collect.
+  * window and the join reuse the same hash partitioning.
+  *
+  * [[run]] collects the classified ops; the two script sinks write the
+  * script and route by size ([[SyncJob.collectable]]): [[syncAuto]] to
+  * one file (or `<out>.parts`), [[syncDistributed]] to a parts dir. All
+  * three share one diff bracket, so no driver state grows with input
+  * size except a script-sized collect below the gate.
   */
 class SyncJob(spark: SparkSession) {
   import spark.implicits._
@@ -199,24 +205,20 @@ class SyncJob(spark: SparkSession) {
   }
 
   /** The classified-op frame WITHOUT collecting: (table, pk, op, ordOff,
-    * ordRow, stmt) with statements rendered executor-side. The at-scale
-    * sink: `opsFrame(...).orderBy("section", "tbl_idx", "ordOff",
-    * "ordRow")` written partitioned (see [[writeScriptDistributed]])
-    * instead of the driver-assembled byte-parity script.
+    * ordRow, stmt) with statements rendered executor-side — for callers
+    * that sink the statements themselves; the full script's sinks are
+    * [[syncAuto]] and [[syncDistributed]].
     */
   def opsFrame(prodPath: String, backupPath: String): DataFrame = {
-    val (joined, prodCat, backupCat, commonTables) = diffFrame(prodPath, backupPath)
-    renderedOps(joined, prodCat, backupCat, commonTables)
+    val (joined, prodInfo, backupCat, commonTables, _) =
+      diffFrameInfo(prodPath, backupPath, persistStmts = false)
+    renderedOps(joined, prodInfo.metas, backupCat, commonTables)
   }
 
-  /** Executor-side statement rendering of an already-joined diff frame. */
-  private def renderedOps(joined: DataFrame,
-      prodCat: ListMap[String, TableMeta], backupCat: ListMap[String, TableMeta],
-      commonTables: Seq[String]): DataFrame = {
-    val tblIdx = commonTables.zipWithIndex.toMap
-    val bcProd = spark.sparkContext.broadcast(prodCat)
-    val bcBackup = spark.sparkContext.broadcast(backupCat)
-    val bcIdx = spark.sparkContext.broadcast(tblIdx)
+  /** The changed rows of a joined diff frame as [[DiffOp]]s: the order
+    * key comes from the side the op keeps (backup for DELETE).
+    */
+  private def diffOps(joined: DataFrame): Dataset[DiffOp] =
     joined.filter(col("op").isNotNull)
       .select(col("table"), col("pk"), col("op"),
         when(col("op") === Differ.OP_DELETE, col("b_ord_off"))
@@ -227,6 +229,16 @@ class SyncJob(spark: SparkSession) {
         graft.codegen.SyncSqlGenerator.rawInsertCol(col("table"), col("p_vals"))
           .as("rawInsert"))
       .as[DiffOp]
+
+  /** Executor-side statement rendering of an already-joined diff frame. */
+  private def renderedOps(joined: DataFrame,
+      prodCat: ListMap[String, TableMeta], backupCat: ListMap[String, TableMeta],
+      commonTables: Seq[String]): DataFrame = {
+    val tblIdx = commonTables.zipWithIndex.toMap
+    val bcProd = spark.sparkContext.broadcast(prodCat)
+    val bcBackup = spark.sparkContext.broadcast(backupCat)
+    val bcIdx = spark.sparkContext.broadcast(tblIdx)
+    diffOps(joined)
       .map { op =>
         val stmt = graft.codegen.SyncSqlGenerator.renderOp(
           bcProd.value(op.table), bcBackup.value(op.table), op)
@@ -241,96 +253,88 @@ class SyncJob(spark: SparkSession) {
       .toDF()
   }
 
-  /** Distributed script sink for diffs too large to collect: statements
-    * written as text, range-partitioned by the global sort key so file
-    * NNNNN order concatenates to the reference's section/table/position
-    * order (a manifest-free total order).
-    */
-  def writeScriptDistributed(prodPath: String, backupPath: String,
-      outDir: String): Unit = {
-    val (joined, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    try renderedOps(joined, prodInfo.metas, backupCat, commonTables)
-      .filter(length(col("stmt")) > 0)
-      .orderBy("section", "tbl_idx", "ordOff", "ordRow")
-      .select("stmt")
-      .write.mode("overwrite").text(outDir)
-    finally cleanup()
-  }
-
-  /** Distributed FULL-script sink: emits the complete sync script —
+  /** Size-routed parts-dir sink: writes the complete sync script —
     * header, DROP/CREATE sections, per-table banners, statements, stats
-    * summary — byte-identical to [[graft.codegen.SyncSqlGenerator.assemble]]
-    * when the sorted part files are concatenated (modulo the text sink's
-    * trailing newline). Statements are rendered executor-side and never
-    * collected; banner/comment lines are O(tables) driver rows unioned in
-    * with the same global sort key. This is the 100 TB path: no driver
-    * state grows with the diff size.
+    * summary — as part files under `outDir` that, concatenated in name
+    * order, are [[graft.codegen.SyncSqlGenerator.assemble]]'s bytes plus
+    * a final newline. A diff within [[SyncJob.collectable]] (op count at
+    * most `maxCollectedOps`) becomes ONE `part-00000`; a larger one takes
+    * the executor-rendered text sink, whose statements are never
+    * collected (banner lines are O(tables) driver rows under the same
+    * global sort key) — the 100 TB path, where no driver state grows
+    * with the diff. `maxCollectedOps = 0` forces the text sink.
     */
   def syncDistributed(prodPath: String, backupPath: String, outDir: String,
-      now: String): SyncOutcome = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
-    try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      scriptLineFrame(joined, prodInfo.metas, backupCat, commonTables,
-        outcome, now)
-        .write.mode("overwrite").text(outDir)
+      now: String, maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps)
+      : SyncOutcome =
+    withDiff(prodPath, backupPath) { (joined, outcome) =>
+      writeScript(scriptLineFrame(joined, outcome, now), outcome,
+        maxCollectedOps, outDir, file = None)
       outcome
-    } finally { joined.unpersist(); cleanup() }
-  }
+    }
 
-  /** Size-routed sibling of [[syncDistributed]] with the SAME outDir
-    * contract (sorted part files concatenate to the full script):
-    * small diffs — op count at or under `maxCollectedOps` — collect the
-    * ordered lines and write ONE part file through the Hadoop FS,
-    * because a shuffle-partition-wide text sink spends more on task
-    * launch + per-file commit than on the script at that size (the
-    * measured small-tile floor of the distributed entry); large diffs
-    * take [[syncDistributed]]'s executor-rendered write untouched. The
-    * bytes are identical on both routes (DistributedSinkSpec pins
-    * each against assemble), so consumers never care which fired.
+  /** Size-routed single-file sink: a diff within [[SyncJob.collectable]]
+    * is written as ONE file at `outPath` (the reference-parity shape,
+    * byte-identical to `SyncSqlGenerator.assemble(run(...), now)`); a
+    * larger one goes to the executor-rendered text sink at
+    * `outPath + ".parts"`, so the driver never holds a diff-sized
+    * script. Returns the outcome and, when distributed, the parts
+    * directory; the script bytes are identical either way.
     */
-  def syncDistributedAuto(prodPath: String, backupPath: String,
-      outDir: String, now: String,
-      maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps): SyncOutcome = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
-    try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      val lineFrame = scriptLineFrame(joined, prodInfo.metas, backupCat,
-        commonTables, outcome, now)
-      if (SyncJob.collectable(outcome, maxCollectedOps)) {
-        val lines = lineFrame.as[String].collect()
-        val dirPath = new org.apache.hadoop.fs.Path(outDir)
-        val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(dirPath, true) // overwrite semantics, like the text sink
-        val out = fs.create(
-          new org.apache.hadoop.fs.Path(dirPath, "part-00000"), true)
-        try lines.foreach { l =>
-          out.write(l.getBytes("UTF-8")); out.write('\n')
-        } finally out.close()
-      } else {
-        lineFrame.write.mode("overwrite").text(outDir)
+  def syncAuto(prodPath: String, backupPath: String, outPath: String,
+      now: String, maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps)
+      : (SyncOutcome, Option[String]) =
+    withDiff(prodPath, backupPath) { (joined, outcome) =>
+      (outcome, writeScript(scriptLineFrame(joined, outcome, now), outcome,
+        maxCollectedOps, outPath + ".parts", file = Some(outPath)))
+    }
+
+  /** The script sinks' one writer. Within [[SyncJob.collectable]] the
+    * ordered lines are collected (script-sized) and written through the
+    * Hadoop FS, which resolves the path against the deployment FS as the
+    * text sink does, as one file: `file` when given, with no final
+    * newline (assemble's bytes), else `partsDir/part-00000`,
+    * newline-terminated like a text-sink part and replacing whatever
+    * `partsDir` held. One file skips the text sink's
+    * shuffle-partition-wide task launch and per-file commit, the
+    * measured floor of a small diff. Past the gate the text sink writes
+    * `partsDir`, which is returned. Creates are raw (checksum-free): the
+    * script is a user-facing file, no .crc sidecar.
+    */
+  private def writeScript(lines: DataFrame, outcome: SyncOutcome,
+      maxCollectedOps: Long, partsDir: String, file: Option[String])
+      : Option[String] =
+    if (SyncJob.collectable(outcome, maxCollectedOps)) {
+      val script = lines.as[String].collect().mkString("\n")
+      val conf = spark.sessionState.newHadoopConf()
+      val (path, text) = file match {
+        case Some(f) => (new org.apache.hadoop.fs.Path(f), script)
+        case None =>
+          val dir = new org.apache.hadoop.fs.Path(partsDir)
+          dir.getFileSystem(conf).delete(dir, true) // overwrite, like the text sink
+          (new org.apache.hadoop.fs.Path(dir, "part-00000"), script + "\n")
       }
-      outcome
-    } finally { joined.unpersist(); cleanup() }
-  }
+      val out = graft.operators.ContentGate.rawFs(path.getFileSystem(conf))
+        .create(path, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+      None
+    } else {
+      lines.write.mode("overwrite").text(partsDir)
+      Some(partsDir)
+    }
 
   /** The complete script as one globally-ordered single-column frame —
     * executor-rendered statements unioned with the O(tables) driver
-    * banner rows under the (sec, tbl, off, row, sub) sort key. Shared by
-    * the distributed text sink and the collected single-file path so the
-    * byte-parity rules (notably: DELETE/UPDATE that render empty are
-    * skipped, exactly as assemble does, while empty INSERT lines are
-    * kept — assemble emits them bare) live in ONE place.
+    * banner rows under the (sec, tbl, off, row, sub) sort key. Every
+    * Spark script route reads it, so the byte-parity rules (notably:
+    * DELETE/UPDATE that render empty are skipped, exactly as assemble
+    * does, while empty INSERT lines are kept — assemble emits them bare)
+    * live in ONE place.
     */
-  private def scriptLineFrame(joined: DataFrame,
-      prodCat: ListMap[String, TableMeta], backupCat: ListMap[String, TableMeta],
-      commonTables: Seq[String], outcome: SyncOutcome, now: String): DataFrame = {
-    val stmts = renderedOps(joined, prodCat, backupCat, commonTables)
+  private def scriptLineFrame(joined: DataFrame, outcome: SyncOutcome,
+      now: String): DataFrame = {
+    val stmts = renderedOps(joined, outcome.prodCatalog, outcome.backupCatalog,
+      outcome.commonTables)
       .filter(col("op") === Differ.OP_INSERT || length(col("stmt")) > 0)
       .select(col("section").as("sec"), col("tbl_idx").as("tbl"),
         col("ordOff").as("off"), col("ordRow").as("row"),
@@ -340,70 +344,6 @@ class SyncJob(spark: SparkSession) {
     banners.unionByName(stmts)
       .orderBy("sec", "tbl", "off", "row", "sub")
       .select("line")
-  }
-
-  /** Single-file sibling of [[syncDistributed]]: same executor-side
-    * statement rendering and global sort, but the ordered lines are
-    * collected and joined into one script string (byte-identical to
-    * `SyncSqlGenerator.assemble(run(...), now)` — the golden spec pins
-    * it). This is the fast default CLI path: the driver receives only
-    * the final script bytes (~1000× smaller than the input dumps), never
-    * the per-op value arrays, and does no per-op rendering loop.
-    */
-  def syncCollected(prodPath: String, backupPath: String,
-      now: String): (SyncOutcome, String) = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
-    try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      val lines = scriptLineFrame(joined, prodInfo.metas, backupCat,
-        commonTables, outcome, now).as[String].collect()
-      (outcome, lines.mkString("\n"))
-    } finally { joined.unpersist(); cleanup() }
-  }
-
-  /** Size-routed sink: one diff (summarize's per-table stats are
-    * O(tables) and already computed for the report), then the SAME
-    * cached frame feeds either the collected single-file script (small
-    * diffs — the reference-parity shape) or the distributed text sink
-    * at `outPath + ".parts"` (op count above `maxCollectedOps` — the
-    * 100 TB path, where collecting the script would bottleneck the
-    * driver). Returns the outcome and, when distributed, the parts
-    * directory; the script bytes are identical either way
-    * (DistributedSinkSpec pins the concatenated parts against
-    * assemble).
-    */
-  def syncAuto(prodPath: String, backupPath: String, outPath: String,
-      now: String, maxCollectedOps: Long = SyncJob.DefaultMaxCollectedOps)
-      : (SyncOutcome, Option[String]) = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
-    try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-      val lineFrame = scriptLineFrame(joined, prodInfo.metas, backupCat,
-        commonTables, outcome, now)
-      if (SyncJob.collectable(outcome, maxCollectedOps)) {
-        val lines = lineFrame.as[String].collect()
-        // Hadoop FS, not java.nio: outPath resolves against the
-        // deployment FS like every other sink in this file (the
-        // distributed route below and syncDistributedAuto already do).
-        // Raw (checksum-free) create — the final script is a
-        // user-facing file, not internal state; no .crc sidecar.
-        val p = new org.apache.hadoop.fs.Path(outPath)
-        val fs = graft.operators.ContentGate.rawFs(
-          p.getFileSystem(spark.sessionState.newHadoopConf()))
-        val out = fs.create(p, true)
-        try out.write(lines.mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        (outcome, None)
-      } else {
-        val partsDir = outPath + ".parts"
-        lineFrame.write.mode("overwrite").text(partsDir)
-        (outcome, Some(partsDir))
-      }
-    } finally { joined.unpersist(); cleanup() }
   }
 
   /** The non-statement lines of the full script (header, section banners,
@@ -518,14 +458,6 @@ class SyncJob(spark: SparkSession) {
     out.result()
   }
 
-  /** Shared diff pipeline: cached full-outer joined frame + catalogs. */
-  private def diffFrame(prodPath: String, backupPath: String)
-      : (DataFrame, ListMap[String, TableMeta], ListMap[String, TableMeta], Seq[String]) = {
-    val (j, pInfo, bCat, common, _) = diffFrameInfo(prodPath, backupPath,
-      persistStmts = false)
-    (j, pInfo.metas, bCat, common)
-  }
-
   /** With `persistStmts` each dump's statement scan is cached
     * MEMORY_AND_DISK so the catalog pass and the record pass share one
     * text scan per dump instead of two; the returned thunk unpersists
@@ -559,23 +491,25 @@ class SyncJob(spark: SparkSession) {
 
     val commonTables = prodCat.keys.filter(backupCat.contains).toSeq
 
-    val prod = records(prodStmts, prodCat)
-      .filter(col("table").isInCollection(commonTables))
-      .select(col("table"), col("pk"), lit(true).as("p_present"),
-        col("ord_off").as("p_ord_off"), col("ord_row").as("p_ord_row"),
-        col("vals").as("p_vals"))
-    val backup = records(backupStmts, backupCat)
-      .filter(col("table").isInCollection(commonTables))
-      .select(col("table"), col("pk"), lit(true).as("b_present"),
-        col("ord_off").as("b_ord_off"), col("ord_row").as("b_ord_row"),
-        col("vals").as("b_vals"))
-
-    val joined = prod.join(backup, Seq("table", "pk"), "full_outer")
-      .withColumn("op",
-        when(col("b_present").isNull, Differ.OP_INSERT)
-          .when(col("p_present").isNull, Differ.OP_DELETE)
-          .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
+    def common(recs: DataFrame) =
+      recs.filter(col("table").isInCollection(commonTables))
+    val joined = SyncJob.classify(common(records(prodStmts, prodCat)),
+      common(records(backupStmts, backupCat)))
     (joined, prodInfo, backupCat, commonTables, cleanup)
+  }
+
+  /** The one diff bracket behind [[run]] and both script sinks: builds
+    * the joined diff frame, caches it, summarizes it, hands both to
+    * `body`, and always releases the cache and the statement scans.
+    */
+  private def withDiff[A](prodPath: String, backupPath: String)(
+      body: (DataFrame, SyncOutcome) => A): A = {
+    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
+      diffFrameInfo(prodPath, backupPath)
+    val joined = joined0.cache()
+    try body(joined,
+      summarize(joined, prodInfo, backupCat, commonTables, prodPath))
+    finally { joined.unpersist(); cleanup() }
   }
 
   /** Estimated rendered-script bytes of one diff row — value text plus
@@ -643,36 +577,19 @@ class SyncJob(spark: SparkSession) {
       commonTables, stats, Nil, createSections)
   }
 
-  def run(prodPath: String, backupPath: String): SyncOutcome = {
-    val (joined0, prodInfo, backupCat, commonTables, cleanup) =
-      diffFrameInfo(prodPath, backupPath)
-    val joined = joined0.cache()
-
-    try {
-      val outcome = summarize(joined, prodInfo, backupCat, commonTables, prodPath)
-
-      val ops = joined.filter(col("op").isNotNull)
-        .select(col("table"), col("pk"), col("op"),
-          when(col("op") === Differ.OP_DELETE, col("b_ord_off"))
-            .otherwise(col("p_ord_off")).as("ordOff"),
-          when(col("op") === Differ.OP_DELETE, col("b_ord_row"))
-            .otherwise(col("p_ord_row")).as("ordRow"),
-          col("p_vals").as("prodVals"), col("b_vals").as("backupVals"),
-          graft.codegen.SyncSqlGenerator.rawInsertCol(col("table"), col("p_vals"))
-            .as("rawInsert"))
-        .as[DiffOp].collect().toSeq
-
-      outcome.copy(ops = ops)
-    } finally { joined.unpersist(); cleanup() }
-  }
+  def run(prodPath: String, backupPath: String): SyncOutcome =
+    withDiff(prodPath, backupPath) { (joined, outcome) =>
+      outcome.copy(ops = diffOps(joined).collect().toSeq)
+    }
 
   /** Full sync script straight from two [[BucketedSync]] snapshots —
     * the repeated-sync fast path behind the CLI `--state` flag. Byte-
-    * identical to [[syncCollected]] on the same dump pair (the golden
-    * spec pins it), but the dumps are never re-parsed: catalogs, table
-    * counts, and CREATE-section offsets come from the snapshot
-    * sidecars; the row diff is the Merkle-gated changed-tables-only
-    * exchange-free bucket join ([[BucketedSync.diffChangedInfo]]).
+    * identical to `SyncSqlGenerator.assemble(run(...), now)` on the same
+    * dump pair (SyncJobSpec pins it), but the dumps are never re-parsed:
+    * catalogs, table counts, and CREATE-section offsets come from the
+    * snapshot sidecars; the row diff is the Merkle-gated
+    * changed-tables-only exchange-free bucket join
+    * ([[BucketedSync.diffChanged]]).
     * Unchanged tables contribute their sidecar counts to the stats tail
     * without a single row read. `prodPath` is touched only to slice the
     * reference-quirk CREATE text when the backup is missing a table.
@@ -688,9 +605,7 @@ class SyncJob(spark: SparkSession) {
     val extraTables = backupCat.keys.filterNot(prodCat.contains).toSeq
     val createSections = CatalogInfo.createSections(prodPath,
       prodSnap.firstCreatePos, prodSnap.stmtEnd, missingTables)
-    val (joined0, _, _) =
-      BucketedSync.diffChangedInfo(spark, prodTable, backupTable)
-    val joined = joined0.cache()
+    val joined = BucketedSync.diffChanged(spark, prodTable, backupTable).cache()
     try {
       // op-type counts exist only for changed tables (the joined frame
       // is diff rows of changed tables); totals come from the sidecars
@@ -708,17 +623,17 @@ class SyncJob(spark: SparkSession) {
       }.toMap
       val outcome = SyncOutcome(prodCat, backupCat, missingTables,
         extraTables, commonTables, stats, Nil, createSections)
-      val lines = scriptLineFrame(joined, prodCat, backupCat,
-        commonTables, outcome, now).as[String].collect()
+      val lines = scriptLineFrame(joined, outcome, now).as[String].collect()
       (outcome, lines.mkString("\n"))
     } finally { joined.unpersist(); () }
   }
 }
 
 object SyncJob {
-  /** Collected-script routing threshold for [[SyncJob.syncAuto]]: above
-    * this many classified ops the script goes through the distributed
-    * text sink instead of a driver collect. 1M ops of TYPICAL width ≈
+  /** Collected-script routing threshold of [[SyncJob.syncAuto]] and
+    * [[SyncJob.syncDistributed]]: above this many classified ops the
+    * script goes through the distributed text sink instead of a driver
+    * collect. 1M ops of TYPICAL width ≈
     * tens of MB of script bytes — comfortably a driver string, while
     * anything larger is the at-scale regime where the single-file
     * contract stops being the point. The op count alone is NOT a safe
@@ -733,10 +648,29 @@ object SyncJob {
     * script size above this always takes the distributed sink,
     * whatever the op count. 256 MB collected lines (plus the one
     * mkString copy on the single-file route) sits safely inside a
-    * modest driver heap; the estimate is value-text length + 64 B/op
-    * syntax overhead.
+    * modest driver heap; the estimate is value-text length + the
+    * catalog-rendered per-op syntax bytes ([[SyncJob.opBytesCol]]).
     */
   val MaxCollectedBytes: Long = 256L << 20
+
+  /** The diff rule, shared by [[SyncJob]] and [[BucketedSync]]: two
+    * record frames (table, pk, ord_off, ord_row, vals) full-outer joined
+    * on (table, pk), each side's columns prefixed `p_` / `b_` with a
+    * `*_present` flag, and `op` = INSERT (production only), DELETE
+    * (backup only), UPDATE (values differ, NULL == NULL) or null
+    * (unchanged row).
+    */
+  private[engine] def classify(prod: DataFrame, backup: DataFrame): DataFrame = {
+    def side(recs: DataFrame, s: String) =
+      recs.select(col("table"), col("pk"), lit(true).as(s"${s}_present"),
+        col("ord_off").as(s"${s}_ord_off"), col("ord_row").as(s"${s}_ord_row"),
+        col("vals").as(s"${s}_vals"))
+    side(prod, "p").join(side(backup, "b"), Seq("table", "pk"), "full_outer")
+      .withColumn("op",
+        when(col("b_present").isNull, Differ.OP_INSERT)
+          .when(col("p_present").isNull, Differ.OP_DELETE)
+          .when(!(col("p_vals") <=> col("b_vals")), Differ.OP_UPDATE))
+  }
 
   /** The collected routes' driver gate: the op count is within
     * `maxCollectedOps` and the estimated script size

@@ -3,10 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.engine.{SyncJob, TypedMode, BucketedSync}
+import graft.engine.{SyncJob, TypedMode}
 import graft.sources.DumpSource
 
-/** Scratch profiling main for round-4 perf work (not shipped surface). */
+/** Scratch profiling main for round-4 perf work (not shipped surface).
+  * The sync layers are measured by `syncbench/run.py --trace 1`.
+  */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -51,57 +53,6 @@ object Prof {
         // full query twice
         time("q39 full cold-ish")(mat(graft.queries.TypedQueries.q39(spark, sfDir)))
         time("q39 full warm")(mat(graft.queries.TypedQueries.q39(spark, sfDir)))
-      case "snap" =>
-        val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-        val cacheDir = s"/tmp/graft_bench_dumps_${sfName}_v${DumpGen.FormatVersion}"
-        val prodPath = java.nio.file.Paths.get(cacheDir, "prod.sql")
-        val backupPath = java.nio.file.Paths.get(cacheDir, "backup.sql")
-        time("snapshot prod")(BucketedSync.snapshot(spark, prodPath.toString, "prof_bk_prod"))
-        time("snapshot backup")(BucketedSync.snapshot(spark, backupPath.toString, "prof_bk_backup"))
-        time("snapshot prod again")(BucketedSync.snapshot(spark, prodPath.toString, "prof_bk_prod"))
-        // breakdown
-        val job = new SyncJob(spark)
-        val stmts = DumpSource.statements(spark, prodPath.toString)
-        val cat = time("catalog")(job.catalog(stmts))
-        val recs = job.records(stmts, cat)
-        time("records mat (noop)")(mat(recs))
-        time("rediff")(mat(BucketedSync.diff(spark, "prof_bk_prod", "prof_bk_backup")))
-      case "sync" =>
-        val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-        val cacheDir = s"/tmp/graft_bench_dumps_${sfName}_v${DumpGen.FormatVersion}"
-        val prodPath = java.nio.file.Paths.get(cacheDir, "prod.sql").toString
-        val backupPath = java.nio.file.Paths.get(cacheDir, "backup.sql").toString
-        val job = new SyncJob(spark)
-        val stmts = DumpSource.statements(spark, prodPath)
-        println("PROF stmt partitions = " + stmts.rdd.getNumPartitions)
-        time("stmts count")(stmts.count())
-        val cat = time("catalog")(job.catalog(stmts))
-        time("records mat")(mat(job.records(stmts, cat)))
-        time("records mat again")(mat(job.records(stmts, cat)))
-        time("syncCollected 1") {
-          job.syncCollected(prodPath, backupPath, "prof")
-        }
-        time("syncCollected 2") {
-          job.syncCollected(prodPath, backupPath, "prof")
-        }
-      case "ops" =>
-        // op count + measured cost of each syncDistributedAuto route,
-        // to place the routing threshold at the real crossover
-        val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-        val cacheDir = s"/tmp/graft_bench_dumps_${sfName}_v${DumpGen.FormatVersion}"
-        val prodPath = java.nio.file.Paths.get(cacheDir, "prod.sql").toString
-        val backupPath = java.nio.file.Paths.get(cacheDir, "backup.sql").toString
-        val job = new SyncJob(spark)
-        val (oc, _) = job.syncCollected(prodPath, backupPath, "prof")
-        println("PROF nOps = " + oc.stats.valuesIterator
-          .map(s => s.missingCount + s.updatedCount + s.deletedCount).sum)
-        val out = java.nio.file.Files.createTempDirectory("prof-route").toString
-        (1 to 2).foreach { i =>
-          time(s"collected route $i")(job.syncDistributedAuto(
-            prodPath, backupPath, out, "prof", maxCollectedOps = Long.MaxValue))
-          time(s"distributed route $i")(job.syncDistributedAuto(
-            prodPath, backupPath, out, "prof", maxCollectedOps = 0L))
-        }
       case "q54ab" =>
         import org.apache.spark.sql.functions._
         def corpus(base: org.apache.spark.sql.DataFrame) = {

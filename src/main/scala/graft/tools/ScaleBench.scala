@@ -94,32 +94,31 @@ object ScaleBench {
         entry(name, dir => materialize(fn(spark, dir)))
       }
 
+    // one reusable output dir per SF (the sinks overwrite) — a fresh
+    // temp dir per timed run leaks script copies under /tmp
+    lazy val outs = Map(
+      smallDir -> Files.createTempDirectory("graft-scale-sync").toString,
+      bigDir -> Files.createTempDirectory("graft-scale-sync").toString)
     // sync core: full dump diff at both SFs (dump generation untimed)
     if (wanted("sync_dump_diff")) {
       val (ps, bs) = dumps(smallDir)
       val (pb, bb) = dumps(bigDir)
       entry("sync_dump_diff", dir => {
         val (p, b) = if (dir == smallDir) (ps, bs) else (pb, bb)
-        new SyncJob(spark).syncCollected(p, b, "scale")
+        new SyncJob(spark).syncAuto(p, b, s"${outs(dir)}/sync.sql", "scale")
         ()
       })
     }
-    // the 100 TB sink: executor-rendered script straight to a text sink,
-    // no driver collect — the ratio the core product claims at scale
-    // (byte parity with the collected script is DistributedSinkSpec's)
+    // the parts-dir sink — the ratio the core product claims at scale
+    // (byte parity with the single-file script is DistributedSinkSpec's)
     if (wanted("sync_dump_diff_distributed")) {
       val (ps, bs) = dumps(smallDir)
       val (pb, bb) = dumps(bigDir)
-      // one reusable output dir per SF (the sinks overwrite) — a fresh
-      // temp dir per timed run leaks script copies under /tmp
-      val outs = Map(
-        smallDir -> Files.createTempDirectory("graft-scale-sync").toString,
-        bigDir -> Files.createTempDirectory("graft-scale-sync").toString)
       // the deployment entry: size-routed (small diffs collect into one
       // part file, past-threshold diffs take the distributed text sink)
       entry("sync_dump_diff_distributed", dir => {
         val (p, b) = if (dir == smallDir) (ps, bs) else (pb, bb)
-        new SyncJob(spark).syncDistributedAuto(p, b, outs(dir), "scale")
+        new SyncJob(spark).syncDistributed(p, b, s"${outs(dir)}/parts", "scale")
         ()
       })
       // the forced 100 TB sink (maxCollectedOps=0): keeps the pure
@@ -127,7 +126,7 @@ object ScaleBench {
       // when the routed entry's tiles both fit the collected route
       entry("sync_dump_diff_distributed_pure", dir => {
         val (p, b) = if (dir == smallDir) (ps, bs) else (pb, bb)
-        new SyncJob(spark).syncDistributedAuto(p, b, outs(dir), "scale",
+        new SyncJob(spark).syncDistributed(p, b, s"${outs(dir)}/parts", "scale",
           maxCollectedOps = 0L)
         ()
       })

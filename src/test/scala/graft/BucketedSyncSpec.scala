@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.codegen.SyncSqlGenerator
 import graft.engine.{BucketedSync, SyncJob}
 
 /** The bucketed fast-path must classify identically to the streaming
@@ -142,7 +143,7 @@ class BucketedSyncSpec extends SparkSuite {
     val (pf, bf) = ("file:" + pf0, "file:" + bf0)
     val job = new SyncJob(spark)
     val now = "URI-TEST"
-    val (_, expected) = job.syncCollected(pf, bf, now)
+    val expected = SyncSqlGenerator.assemble(job.run(pf, bf), now)
 
     assert(BucketedSync.ensureSnapshot(spark, pf, "bsync_uri_prod"))
     assert(BucketedSync.ensureSnapshot(spark, bf, "bsync_uri_backup"))
@@ -164,14 +165,14 @@ class BucketedSyncSpec extends SparkSuite {
     val (_, s3) = job.syncFromBucketed("bsync_uri_prod", "bsync_uri_backup",
       pf, now)
     assert(s3 != expected)
-    assert(s3 == job.syncCollected(pf, bf, now)._2)
+    assert(s3 == SyncSqlGenerator.assemble(job.run(pf, bf), now))
   }
 
   test("syncAuto writes the collected script through a file: URI, no crc sidecar") {
     val (pf, bf) = (tmpFile(prod), tmpFile(backup))
     val job = new SyncJob(spark)
     val now = "URI-AUTO"
-    val (_, expected) = job.syncCollected(pf, bf, now)
+    val expected = SyncSqlGenerator.assemble(job.run(pf, bf), now)
     val outDir = Files.createTempDirectory("bsync-uri")
     val out = outDir.resolve("script.sql")
     val (_, parts) = job.syncAuto(pf, bf, "file:" + out, now)

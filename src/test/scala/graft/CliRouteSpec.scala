@@ -129,6 +129,29 @@ class CliRouteSpec extends SparkSuite {
     assert(inserts == n)
   }
 
+  test("--state writes its script into an output dir that does not exist yet") {
+    val dir = Files.createTempDirectory("graft-cli-state")
+    val (p, b) = pair(dir)
+    val expected = masked(SyncSqlGenerator.assemble(LocalSync.run(p, b), "T"))
+    val (rc, _) = cli(dir, Nil, "--state", "state", p, b, "out/nested/x.sql")
+    assert(rc == 0, Files.readString(dir.resolve("cli.log")))
+    assert(masked(Files.readString(dir.resolve("out/nested/x.sql"))) == expected)
+  }
+
+  test("--distributed-out on a small pair writes one part equal to the default script") {
+    val dir = Files.createTempDirectory("graft-cli-dist")
+    val (p, b) = pair(dir)
+    val (rc, _) = cli(dir, Nil, p, b, "out.sql")
+    assert(rc == 0, Files.readString(dir.resolve("cli.log")))
+    val (rc2, _) = cli(dir, Nil, "--distributed-out", "parts", p, b)
+    assert(rc2 == 0, Files.readString(dir.resolve("cli.log")))
+    val parts = Files.list(dir.resolve("parts")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.map(_.getFileName.toString) == Seq("part-00000"))
+    assert(masked(Files.readString(parts.head)) ==
+      masked(Files.readString(dir.resolve("out.sql"))) + "\n")
+  }
+
   test("--state or --distributed-out as the last argument is a usage error") {
     val dir = Files.createTempDirectory("graft-cli-usage")
     val (p, b) = pair(dir)

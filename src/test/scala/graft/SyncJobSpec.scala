@@ -118,9 +118,10 @@ class SyncJobSpec extends SparkSuite {
     val now = expLines(2).stripPrefix("-- Generated on: ")
     val got = SyncSqlGenerator.assemble(o, now)
     assert(got.split("\n", -1).toSeq == expLines)
-    // the executor-rendered collected path must emit the same bytes
-    val (_, collected) = job.syncCollected(prod.toString, backup.toString, now)
-    assert(collected == got)
+    // the executor-rendered single-file sink must emit the same bytes
+    val out = Files.createTempDirectory("graft-golden").resolve("out.sql")
+    assert(job.syncAuto(prod.toString, backup.toString, out.toString, now)._2.isEmpty)
+    assert(new String(Files.readAllBytes(out), "UTF-8") == got)
   }
 
   test("--state fast path: snapshot-rediff script is byte-identical, snapshots reuse") {
@@ -132,7 +133,7 @@ class SyncJobSpec extends SparkSuite {
     val prod = tmpFile(res("prod_sf0.001.sql"))
     val backup = tmpFile(res("backup_sf0.001.sql"))
     val now = "STATE-TEST"
-    val (_, expected) = job.syncCollected(prod.toString, backup.toString, now)
+    val expected = SyncSqlGenerator.assemble(job.run(prod.toString, backup.toString), now)
 
     // first sync: both snapshots written
     assert(BucketedSync.ensureSnapshot(spark, prod.toString, "sjs_prod"))
@@ -186,7 +187,7 @@ class SyncJobSpec extends SparkSuite {
     val prod2 = tmpFile(res("prod_sf0.001.sql") +
       "INSERT INTO `nation` (`n_nationkey`, `n_name`, `n_regionkey`) VALUES\n" +
       "(999999, 'NEWLAND', 0);\n")
-    val (_, expected2) = job.syncCollected(prod2.toString, backup.toString, now)
+    val expected2 = SyncSqlGenerator.assemble(job.run(prod2.toString, backup.toString), now)
     assert(BucketedSync.ensureSnapshot(spark, prod2.toString, "sjs_prod"))
     val (_, s4) = job.syncFromBucketed("sjs_prod", "sjs_backup",
       prod2.toString, now)
@@ -202,7 +203,7 @@ class SyncJobSpec extends SparkSuite {
     val prod = tmpFile(res("prod_sf0.001.sql"))
     val backup = tmpFile(res("backup_sf0.001.sql"))
     val now = "AUTO-TEST"
-    val (_, expected) = job.syncCollected(prod.toString, backup.toString, now)
+    val expected = SyncSqlGenerator.assemble(job.run(prod.toString, backup.toString), now)
 
     val outDir = Files.createTempDirectory("graft-auto")
     val outSmall = outDir.resolve("small.sql")

@@ -31,6 +31,15 @@ mask() { sed 's/^-- Generated on:.*/-- Generated on:/' "$1"; }
 if [ -s "$OUT/cli_state.sql" ] && cmp -s <(mask "$OUT/cli_sync.sql") <(mask "$OUT/cli_state.sql"); then
   echo "   ok: default and --state routes write the same script"
 else echo "   FAIL: default and --state route scripts differ"; fail=1; fi
+# --distributed-out writes part files; sorted and concatenated, minus the
+# parts' final newline, they are the same script
+sbt -batch "runMain graft.cli.Main --distributed-out $OUT/cli_parts $OUT/prod.sql $OUT/backup.sql" >/tmp/qs_cli_parts.log 2>&1
+if ls "$OUT"/cli_parts/part-* >/dev/null 2>&1; then
+  cat $(ls "$OUT"/cli_parts/part-* | sort) | head -c -1 >"$OUT/cli_parts.sql"
+fi
+if [ -s "$OUT/cli_parts.sql" ] && cmp -s <(mask "$OUT/cli_sync.sql") <(mask "$OUT/cli_parts.sql"); then
+  echo "   ok: default and --distributed-out routes write the same script"
+else echo "   FAIL: default and --distributed-out route scripts differ"; fail=1; fi
 sbt -batch "runMain graft.tools.Quickstart sync $OUT" >/tmp/qs_sync.log 2>&1
 check sync "sync script:" /tmp/qs_sync.log
 
